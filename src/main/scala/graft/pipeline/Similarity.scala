@@ -695,62 +695,46 @@ object Similarity {
     broadcast(cents.withColumn("__cbn2__", dot(col("__cbv__"), col("__cbv__"))))
   }
 
-  /** One collected codeword of the PACKED rank-1 encode (r19 opt):
-    * `(draw id, stored rank, codeword vector, norm, squared norm)` —
+  /** One collected codeword of the PACKED rank-1 encode:
+    * `(stored rank __ci__, codeword vector, norm, squared norm)` —
     * the per-subspace literal array the packed argmax scans per row.
     */
-  private[pipeline] final case class PqCw(id: Long, ci: Int, v: Seq[Double], n: Double, n2: Double)
+  private[pipeline] final case class PqCw(ci: Int, v: Seq[Double], n: Double, n2: Double)
 
-  /** Collect a stored-schema codebook frame's rows into per-subspace
-    * [[PqCw]] arrays for the packed encode — `None` when the shape
-    * can't take the packed path (non-integral draw ids, a legacy
-    * sidecar lacking `__ci__`/`__cbn2__`, or a Long.MinValue id whose
-    * negation would overflow the tiebreak), in which case callers keep
-    * the shuffled explode/join/window pipeline. The collect is bounded
-    * by m·ksub — the same frame [[pqSearch]] already broadcasts whole.
+  /** Collect a stored-schema codebook frame's rows — (`sub_id`,
+    * `__ci__`, `__cbv__`, `__cbn__`, `__cbn2__`), what a PQ store
+    * build writes to `_codebooks` — into per-subspace [[PqCw]] arrays
+    * for the packed encode. The stored rank `__ci__` is the tiebreak
+    * key: it is row_number over (sub_id, cent_id asc) − 1, so it
+    * follows draw-id order within a subspace, and the packed winner is
+    * pqRank1's (metric, cent_id asc) winner for every draw-id type.
+    * The collect is bounded by m·ksub — the same frame [[pqSearch]]
+    * already broadcasts whole.
     */
   private[pipeline] def packCodebook(
       rows: Array[org.apache.spark.sql.Row],
       schema: org.apache.spark.sql.types.StructType
-  ): Option[Array[Array[PqCw]]] = {
-    import org.apache.spark.sql.types._
-    def idx(n: String): Option[Int] = if (schema.fieldNames.contains(n)) Some(schema.fieldIndex(n)) else None
-    val out = for {
-      subI <- idx("sub_id"); idI <- idx("cent_id"); ciI <- idx("__ci__")
-      vI <- idx("__cbv__"); nI <- idx("__cbn__"); n2I <- idx("__cbn2__")
-      integral = schema(idI).dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }
-      if integral && rows.nonEmpty && rows.forall(r => !r.isNullAt(idI) && !r.isNullAt(ciI))
-      entries = rows.map { r =>
-        val id = r.get(idI) match {
-          case b: Byte => b.toLong; case s: Short => s.toLong
-          case i: Int => i.toLong; case l: Long => l
-        }
-        (r.getInt(subI), PqCw(id, r.getInt(ciI), r.getSeq[Double](vI), r.getDouble(nI), r.getDouble(n2I)))
-      }
-      if !entries.exists(_._2.id == Long.MinValue)
-      m = entries.map(_._1).max + 1
-      grouped = entries.groupBy(_._1)
-      if (0 until m).forall(grouped.contains)
-    } yield (0 until m).map(s => grouped(s).map(_._2)).toArray
-    out
+  ): Array[Array[PqCw]] = {
+    val Seq(subI, ciI, vI, nI, n2I) =
+      Seq("sub_id", "__ci__", "__cbv__", "__cbn__", "__cbn2__").map(schema.fieldIndex)
+    val bySub = rows.groupBy(_.getInt(subI))
+    (0 until bySub.size).map(s => bySub(s).map(r =>
+      PqCw(r.getInt(ciI), r.getSeq[Double](vI), r.getDouble(nI), r.getDouble(n2I)))).toArray
   }
 
-  /** The PACKED rank-1 encode helper (r19 opt): the winning codeword
-    * of every subspace computed per ROW against the driver-collected
+  /** The PACKED rank-1 encode helper: the winning codeword of every
+    * subspace computed per ROW against the driver-collected
     * codebook — [[graft.plans.PqArgBestExpr]], a codegen'd primitive
     * loop — instead of explode × codebook-join × window over
     * n·m·ksub rows. ONE projection chain, zero exchanges; at corpus
-    * scale the encode stops shuffling anything at all (guide §2.4).
+    * scale the encode shuffles nothing at all (guide §2.4).
     *
-    * Bit-identical to the shuffled form by construction: the kernel
-    * replays pqRank1's metric arithmetic term for term over the same
-    * staged subvector norms and the same collected codeword doubles,
-    * and applies the same (metric, draw-id) tiebreak with the window
-    * defaults' NaN/null placement — see [[graft.plans.PqArgBestExpr]]'s
-    * contract note.
+    * The kernel replays pqRank1's metric arithmetic term for term over
+    * the same staged subvector norms and the same collected codeword
+    * doubles, with the window defaults' NaN/null placement; ties go
+    * to the lower stored rank `__ci__`, which follows draw-id order —
+    * see [[packCodebook]] and [[graft.plans.PqArgBestExpr]]'s contract
+    * note.
     *
     * Usage: select [[stagedCols]] first (slices + norms hoisted so
     * each computes once per row), then [[idxCols]] (`__bi{s}__`, the
@@ -765,7 +749,7 @@ object Similarity {
   ) {
     val m: Int = packed.length
     val sub: Int = packed.head.head.v.length
-    private val ids = packed.map(_.map(_.id))
+    private val keys = packed.map(_.map(_.ci.toLong))
     private val vsA = packed.map(_.map(_.v.toArray))
     private val nsA = packed.map(_.map(_.n))
 
@@ -788,7 +772,7 @@ object Similarity {
         graft.internal.columnExpr(col(s"__sv${s}__")),
         graft.internal.columnExpr(aux),
         graft.internal.columnExpr(lit(s)),
-        ids, vsA, nsA, scoreDecimals, l2)).as(s"__bi${s}__")
+        keys, vsA, nsA, scoreDecimals, l2)).as(s"__bi${s}__")
     }
 
     /** Winner rank (`__ci__`) of subspace `s` — a literal lookup. */
@@ -865,11 +849,11 @@ object Similarity {
     *
     * Bit-identical to the window form: same staged subvector norm /
     * squared norm, the same rounded metric expression (the l2 branch's
-    * codeword squared norm is computed driver-side by the same
+    * codeword squared norm is computed by the kernel with the same
     * left-to-right accumulation as [[graft.plans.DotProductExpr]] —
     * IEEE double arithmetic is engine-independent), and the same
     * (metric, id) tiebreak with the same NaN/null placement (see
-    * [[pqPackedWinners]]'s comparator note). The collect is bounded by
+    * [[graft.plans.PqArgBestExpr]]'s contract note). The collect is bounded by
     * m·ksub — the frame every consumer already broadcasts whole; the
     * per-iteration collect also REPLACES the compactCentroids
     * plan-depth relief (each iteration now trains from a literal).
@@ -897,24 +881,11 @@ object Similarity {
     val bySub = rows.groupBy(_.getInt(0))
     val m = bySub.keysIterator.max + 1
     if (!(0 until m).forall(bySub.contains)) return None
-    // the l2 metric's codeword squared norm, by the same left-to-right
-    // accumulation as DotProductExpr (the value the shuffled form
-    // computes fresh per join row) — IEEE doubles, engine-independent
-    def dotLR(a: Seq[Double]): Double = {
-      var s = 0.0d; var i = 0
-      while (i < a.length) { s += a(i) * a(i); i += 1 }
-      s
-    }
-    val packed: Seq[Seq[PqCw]] = (0 until m).map { s =>
-      bySub(s).toSeq.map { r =>
-        val v = r.getSeq[Double](2)
-        PqCw(r.getLong(1), -1, v, r.getDouble(3), dotLR(v))
-      }
-    }
-    val ids = packed.map(_.map(_.id).toArray).toArray
-    val vsA = packed.map(_.map(_.v.toArray).toArray).toArray
-    val nsA = packed.map(_.map(_.n).toArray).toArray
-    val allIds = typedLit(packed.map(_.map(_.id)))
+    val packed = (0 until m).map(bySub(_))
+    val ids = packed.map(_.map(_.getLong(1))).toArray
+    val vsA = packed.map(_.map(_.getSeq[Double](2).toArray)).toArray
+    val nsA = packed.map(_.map(_.getDouble(3))).toArray
+    val allIds = typedLit(ids.map(_.toSeq).toSeq)
     val staged =
       if (!l2) ex.withColumn("__svn__", norm(col("__sv__")))
       else ex.withColumn("__sv2__", dot(col("__sv__"), col("__sv__")))

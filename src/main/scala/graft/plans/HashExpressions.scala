@@ -292,7 +292,12 @@ case class WinnowExpr(child: Expression, k: Int, w: Int)
   *    Spark's own Round recipe for doubles —
   *    `BigDecimal.valueOf(x).setScale(dec, HALF_UP)` with NaN/Inf
   *    passed through;
-  *  - the tiebreak is (metric best, then draw id ascending); a null
+  *  - the tiebreak is (metric best, then key ascending). Keys are the
+  *    candidate ids (codeword draw ids in Lloyd training, centroid ids
+  *    in two-level routing) or the stored codeword ranks `__ci__` (PQ
+  *    store encode); `__ci__` is row_number over draw-id order within
+  *    a subspace, so it picks the window's (metric, cent_id asc)
+  *    winner for every draw-id type. A null
   *    metric orders SMALLEST exactly like the window defaults (desc
   *    NULLS LAST → loses under cosine-max; asc NULLS FIRST → wins
   *    under L2-min) and NaN orders largest, NaN == NaN

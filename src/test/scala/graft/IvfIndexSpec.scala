@@ -533,11 +533,46 @@ class IvfIndexSpec extends SparkSuite {
     // 500 corpus rows cannot seed 600 codewords: the init draw comes
     // up short, and silent unequal counts would mis-address the flat
     // ADC LUT (s*ksub + rank) in every downstream scorer
-    val ex = intercept[IllegalArgumentException] {
-      IvfIndex.buildPq(emb, "vec_id", "emb", tempPath("pqfail"),
-        dims = 64, m = 4, ksub = 600, iters = 0, nlist = 16)
+    for (residual <- Seq(false, true)) {
+      val ex = intercept[IllegalArgumentException] {
+        IvfIndex.buildPq(emb, "vec_id", "emb", tempPath(s"pqfail-$residual"),
+          dims = 64, m = 4, ksub = 600, iters = 0, nlist = 16, residual = residual)
+      }
+      assert(ex.getMessage.contains("codeword counts"),
+        s"unexpected (residual = $residual): ${ex.getMessage}")
     }
-    assert(ex.getMessage.contains("codeword counts"), s"unexpected: ${ex.getMessage}")
+  }
+
+  test("non-integral ids build the same raw and residual PQ stores as integral ids") {
+    val s = spark
+    // md5 over the id's string form draws the same centroids and
+    // codewords for decimal ids, and the stored rank __ci__ (SQL
+    // row_number over cent_id) orders them the same, so the packed
+    // encode keyed on __ci__ must store identical content
+    val decEmb = emb.withColumn("vec_id", col("vec_id").cast("decimal(20,0)"))
+    def cells(p: String) = s.read.parquet(p)
+      .select(col("vec_id").cast("long"), col("cent_id").cast("long"),
+        col("__pq__").cast("array<int>"), col("__xn__"))
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getSeq[Int](2), r.getDouble(3)))).toMap
+    def codebooks(p: String) = s.read.parquet(s"$p/_codebooks")
+      .select(col("sub_id"), col("__ci__"), col("__cbv__"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2))).toSet
+    for (residual <- Seq(false, true)) {
+      val Seq(pLong, pDec) = Seq(emb -> "long", decEmb -> "dec").map { case (df, tag) =>
+        val p = tempPath(s"pq-$tag-$residual")
+        IvfIndex.buildPq(df, "vec_id", "emb", p, dims = 64, m = 4, ksub = 8,
+          iters = 1, nlist = 16, residual = residual)
+        p
+      }
+      val (cLong, cDec) = (cells(pLong), cells(pDec))
+      assert(cLong.nonEmpty && cLong.size == emb.count(), s"residual = $residual: ${cLong.size} rows")
+      assert(cDec == cLong,
+        s"residual = $residual: decimal ids must store the same (cell, __pq__, __xn__) per id; " +
+          s"differing ids: ${cLong.keySet.filter(k => cDec.get(k) != cLong.get(k)).take(5)}")
+      val (cbLong, cbDec) = (codebooks(pLong), codebooks(pDec))
+      assert(cbLong.size == 4 * 8, s"residual = $residual: ${cbLong.size} codewords")
+      assert(cbDec == cbLong, s"residual = $residual: decimal ids must store the same codebooks")
+    }
   }
 
   test("PQ managed lifecycle: catch-up carries codes verbatim so the drain gate holds across the flip (r16)") {
